@@ -30,9 +30,9 @@ object BatchExec {
 
   /** Reentrancy state per session: depth + the conf value the OUTERMOST
     * entrant saw. Session conf is session-global (not thread-local), and
-    * nested/concurrent uses are real — processBatch's per-table
-    * `par.foreach` calls merge(), which is itself wrapped. Without the
-    * guard, restore-last is only accidentally safe (every caller sets the
+    * nested/concurrent uses are real — the e2e multitable sink's
+    * per-table `par.foreach` calls merge(), which is itself wrapped.
+    * Without the guard, restore-last is only accidentally safe (every caller sets the
     * SAME value); a body wanting a different conf value, or an inner
     * restore racing an outer body, would leave the streaming engine's
     * conf flipped. The outermost exit alone restores. */

@@ -1311,7 +1311,7 @@ object SnapshotLog {
   /** A committed parquet data file's name (not a _SUCCESS marker, dot
     * file, or in-flight temp) — the one listing contract every
     * data/delete-file producer shares. */
-  private def isParquetFile(name: String): Boolean =
+  private[graft] def isParquetFile(name: String): Boolean =
     name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
 
   /** Per-file parquet footer stats: row count plus min/max of `statsCol`

@@ -501,8 +501,10 @@ object PipelineOps extends QueryModule {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (b: DataFrame, _: Long) =>
         // per-table fanout: the distinct table list is O(tables), and each
-        // table merges via a filtered fully-distributed job (the same
-        // shape as CdcWriter.routeAndWrite / the reference's writer loop).
+        // table merges via a filtered fully-distributed job (the shape of
+        // the reference's writer loop; a merge reads each table's stored
+        // state, so it cannot share one routed write the way the append
+        // sink, IngestPipeline.processBatch, does).
         // The merges target DISJOINT table dirs (each under its own
         // SnapshotLog lock), so they submit concurrently — independent
         // Spark jobs sharing the executor pool, exactly how a real

@@ -3,12 +3,15 @@ package graft.streaming
 import graft.ingest.CdcWriter
 import graft.observe.Metrics
 import graft.reliability.{DeadLetter, Retry, RetryPolicy}
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import scala.util.control.NonFatal
 
-/** The streaming half of the engine: CDC envelope stream → per-table
-  * router → day-partitioned append, with batch-level retry and DLQ.
+/** The streaming half of the engine: CDC envelope stream → one routed,
+  * day-partitioned write per micro-batch → per-table publish, with
+  * retry and DLQ per table.
   *
   * Replaces, via Structured Streaming built-ins, the machinery the
   * reference hand-rolls (SURVEY §2.2):
@@ -24,8 +27,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    pause ≥8000 / resume ≤5000) → source rate limits
   *    (maxFilesPerTrigger / maxOffsetsPerTrigger) + AQE.
   *  - per-batch retry then DLQ (ref buffer/batch.go:215-285) →
-  *    [[Retry.execute]] around each table write, [[DeadLetter.append]] on
-  *    exhaustion; the batch is never lost and never blocks the stream.
+  *    [[Retry.execute]] around the shared write and each table's publish,
+  *    [[DeadLetter.append]] of the table's slice on exhaustion; the batch
+  *    is never lost and never blocks the stream.
   */
 final case class IngestConfig(
     outDir: String,
@@ -45,9 +49,10 @@ object IngestPipeline {
     * (dead-lettered, never retried — retrying can't fix a name). The
     * shared guard is [[graft.model.Identifiers]]. */
 
-  /** Process one micro-batch: route per table, write each with retry,
-    * dead-letter a table's slice if retries exhaust. Public so batch jobs
-    * and tests can drive it without a stream. */
+  /** Process one micro-batch: drop unroutable slices to the DLQ, write
+    * every routable table in ONE staged job, publish each table's files
+    * with retry, dead-letter a table's slice if retries exhaust. Public so
+    * batch jobs and tests can drive it without a stream. */
   def processBatch(cfg: IngestConfig)(batch: DataFrame, batchId: Long): Unit =
     // foreachBatch hands us a frame bound to the streaming session clone,
     // where AQE is force-disabled — re-enable it for these plain batch
@@ -56,14 +61,15 @@ object IngestPipeline {
     graft.ingest.BatchExec.withAqe(batch) { processBatch0(cfg, batch) }
 
   private def processBatch0(cfg: IngestConfig, batch: DataFrame): Unit = {
-    // the fanout runs T per-table filtered writes plus the fused
-    // table-list/lag aggregate off this one frame — persist so an
-    // EXPENSIVE upstream (WAL decode) is computed once, not T + 1
-    // times. A cheap lineage (the file source's few-file parquet scan)
-    // re-scans for less than the cache write costs — skip (guide §5).
+    // the fused table aggregate, the routed write and any DLQ slices all
+    // read this one frame — persist so an EXPENSIVE upstream (WAL decode)
+    // is computed once. A cheap lineage (the file source's few-file
+    // parquet scan) re-scans for less than the cache write costs — skip
+    // (guide §5).
     val doPersist = !graft.ingest.BatchExec.cheapToRecompute(batch)
     if (doPersist) batch.persist()
     try {
+      val spark = batch.sparkSession
       val hasTs = batch.columns.contains(graft.ingest.Cdc.TsColumn)
       // ONE grouped aggregate replaces the table-list distinct + one
       // count/max(ts) job per table slice + the whole-batch max(ts) job
@@ -82,51 +88,66 @@ object IngestPipeline {
         .map(r => (if (r.isNullAt(0)) null else r.getString(0)) ->
           (r.getLong(1), if (r.isNullAt(2)) None else Some(r.getTimestamp(2))))
         .sortBy(p => Option(p._1))
-      // per-table slices write to DISJOINT dirs and the batch is cached:
-      // submit them CONCURRENTLY so one table's write tail back-fills
-      // with the next table's tasks (guide §2.6 — the same overlap
-      // e2eMultitable's merge fanout uses; the reference writer loops
-      // sequentially). DLQ appends serialize on the DLQ table lock, the
-      // metrics registry is atomic, and per-table failure isolation is
-      // unchanged — each slice's try/catch is its own.
-      import scala.collection.parallel.CollectionConverters._
-      tableAggs.par.foreach { case (t, (nRows, maxTsOpt)) =>
+      def deadLetter(t: String, e: Throwable): Unit = {
         val slice =
           if (t == null) batch.filter(col(cfg.tableCol).isNull)
           else batch.filter(col(cfg.tableCol) === t)
+        DeadLetter.append(slice, cfg.dlqDir, cfg.sourceId, t, e,
+          retryCount = cfg.retry.maxAttempts)
+        cfg.metrics.inc("cdc", "dlq_total")
+      }
+      // validate BEFORE any write or retry loop: IllegalArgumentException
+      // maps to the `validation` DLQ class (ref deadletter.go error
+      // typing); a null name is as unroutable as a malformed one, and a
+      // snapshot-backed target refuses hive-layout appends
+      val routable = tableAggs.filter { case (t, _) =>
         try {
-          // validate BEFORE the retry loop: IllegalArgumentException maps to
-          // the `validation` DLQ class (ref deadletter.go error typing); a
-          // null name is as unroutable as a malformed one
           require(t != null && graft.model.Identifiers.isValid(t),
             s"invalid table name: '$t'")
-          val dirPath = new org.apache.hadoop.fs.Path(s"${cfg.outDir}/$t")
-          val fs = dirPath.getFileSystem(
-            slice.sparkSession.sparkContext.hadoopConfiguration)
-          def dirBytes: Long =
-            if (fs.exists(dirPath)) fs.getContentSummary(dirPath).getLength else 0L
-          val bytesBefore = dirBytes
-          Retry.execute(cfg.retry) { () =>
-            CdcWriter.write(slice, s"${cfg.outDir}/$t", SaveMode.Append)
+          CdcWriter.requireHiveTarget(spark, s"${cfg.outDir}/$t")
+          true
+        } catch { case NonFatal(e) => deadLetter(t, e); false }
+      }
+      if (routable.nonEmpty) {
+        // ONE routed write for every routable table, staged under a
+        // `_`-prefixed dir every reader skips, then published per table by
+        // rename — per-table failure isolation lives in the publish step
+        val staging = new Path(s"${cfg.outDir}/_staging/${java.util.UUID.randomUUID()}")
+        val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        try {
+          val names = routable.map(_._1)
+          val written =
+            try {
+              Retry.execute(cfg.retry) { () =>
+                CdcWriter.routedWrite(batch.filter(col(cfg.tableCol).isin(names: _*)),
+                  cfg.tableCol, staging.toString)
+              }
+              true
+            } catch { case NonFatal(e) => names.foreach(deadLetter(_, e)); false }
+          if (written) routable.foreach { case (t, (nRows, maxTsOpt)) =>
+            try {
+              val bytes = Retry.execute(cfg.retry) { () =>
+                CdcWriter.publishStaged(spark, staging.toString, t, s"${cfg.outDir}/$t")
+              }
+              cfg.metrics.inc("iceberg", "commits_total")
+              // per-table series (exposition-label names — the
+              // `{source,table}` dimensions the reference's metrics
+              // service queries, services/metrics.go:179-210) plus the
+              // bytes counter its writer tracks: counts come from the
+              // fused aggregate above, bytes are the published files'
+              // lengths
+              cfg.metrics.inc("iceberg", "bytes_written_total", bytes)
+              cfg.metrics.inc("cdc", s"""events_total{table="$t"}""", nRows)
+              maxTsOpt.foreach(ts =>
+                cfg.metrics.setGauge("cdc", s"""lag_seconds{table="$t"}""",
+                  (System.currentTimeMillis() - ts.getTime) / 1000.0))
+            } catch { case NonFatal(e) => deadLetter(t, e) }
           }
-          cfg.metrics.inc("iceberg", "commits_total")
-          // per-table series (exposition-label names — the
-          // `{source,table}` dimensions the reference's metrics service
-          // queries, services/metrics.go:179-210) plus the bytes
-          // counter its writer tracks; counts come from the fused
-          // aggregate above, and the byte delta is two metadata calls
-          // around the write.
-          cfg.metrics.inc("iceberg", "bytes_written_total",
-            math.max(0L, dirBytes - bytesBefore))
-          cfg.metrics.inc("cdc", s"""events_total{table="$t"}""", nRows)
-          maxTsOpt.foreach(ts =>
-            cfg.metrics.setGauge("cdc", s"""lag_seconds{table="$t"}""",
-              (System.currentTimeMillis() - ts.getTime) / 1000.0))
-        } catch {
-          case e: Throwable =>
-            DeadLetter.append(slice, cfg.dlqDir, cfg.sourceId, t, e,
-              retryCount = cfg.retry.maxAttempts)
-            cfg.metrics.inc("cdc", "dlq_total")
+        } finally {
+          fs.delete(staging, true)
+          // drop the shared parent once empty; a concurrent batch's
+          // staging dir keeps it (non-recursive delete refuses)
+          try fs.delete(staging.getParent, false) catch { case NonFatal(_) => () }
         }
       }
       // replication lag: wall clock minus newest commit timestamp in the
